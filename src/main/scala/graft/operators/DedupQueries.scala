@@ -497,6 +497,18 @@ object DedupQueries {
     * object-store backed, survives executor loss). Locally — no
     * checkpoint dir — `localCheckpoint` is the right trade: single JVM,
     * no replication target exists anyway.
+    *
+    * Invariant: the FIRST action over a truncated frame computes every
+    * one of its partitions. The local checkpoint is lazy: the first job
+    * pins the blocks it computes, Spark runs one extra job for any
+    * partition a partial action (take/limit/show) skipped, and from then
+    * on the lineage is gone — every later read is served from the pinned
+    * blocks, and a lost block cannot be recomputed. Every call site here
+    * meets the invariant with a full action straight away (the per-round
+    * `canonSum`, an aggregate, a store append), and the frames
+    * `propagateMinLabels` returns have already met `canonSum` before
+    * they escape. `labelsCache` never holds a truncated frame: it keeps
+    * a read of the label STORE (DedupSpec reuses it after a `limit`).
     */
   private def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()

@@ -1148,8 +1148,8 @@ object DocsisQueries {
     // dx21: SCHEMA EVOLUTION e2e — the ClickHouse ADD COLUMN / Delta
     // mergeSchema surface FactTableSpec covers unit-level, with a DuckDB
     // oracle behind it: v0 appends rows WITHOUT l_returnflag, v1 appends
-    // rows WITH it, compact() merges both through the mergeSchema read
-    // (a single-footer schema pick would silently drop the new column —
+    // rows WITH it, compact() merges both footer schemas by the
+    // mergeSchema rule (a single-footer schema pick would silently drop the new column —
     // the exact bug the FactTable read path guards), and the final
     // grouped read sees NULL for every pre-evolution row. The oracle
     // reconstructs the same rollup with a CASE, so a merge that dropped

@@ -5,7 +5,10 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{GraftFileBridge, HadoopFsRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A minimal transaction-logged parquet table — the Spark-side analog of
   * the reference's MergeTree storage model (tables.sql:30): append-only
@@ -29,7 +32,7 @@ import org.apache.spark.sql.functions._
   *   already in the log — exactly-once for `foreachBatch` retries, the
   *   guarantee the reference explicitly lacks (mb8600.py:308-311 drops
   *   failed batches).
-  * - **Snapshot isolation**: readers list live files from the log; a
+  * - **Snapshot isolation**: readers take live files from the log; a
   *   compaction commit atomically swaps small parts for merged ones, so
   *   a reader sees either the old or the new part set, never both.
   *
@@ -320,7 +323,7 @@ class FactTable(val root: String, spark: SparkSession,
               else pre.dataFiles.filter(f => vict.contains(f.path))
             if (victims.isEmpty) None
             else {
-              val keys = spark.read.parquet(t.path)
+              val keys = readFiles(Seq(t))
               val m = masked(victims, pre.tombFiles)
               // null-safe <=> mirrors masked(): softDelete tombstones
               // NULL key tuples, which a plain equi-semi-join would
@@ -543,6 +546,7 @@ class FactTable(val root: String, spark: SparkSession,
       // deletion-vector sidecars of reconciled tombstone parts
       fs.delete(new Path(p + VictimsSuffix), false)
       victimsCache.remove(p)
+      schemaCache.remove(p)
     }
     victims.count(p => fs.delete(new Path(p), false))
   }
@@ -711,8 +715,8 @@ class FactTable(val root: String, spark: SparkSession,
     * and min/max stat pruning keeps recent-`partitionCol` predicates
     * off the cold files entirely (the hot dashboard never pays the
     * cold volume's latency). The volume mirrors the hot layout
-    * (`…/<volume>/data/<generation>/<partition>=…`) so
-    * generation-scoped partition discovery works unchanged. Idempotent:
+    * (`…/<volume>/data/<generation>/<partition>=…`), so the read path
+    * parses its partition values like any other generation's. Idempotent:
     * parts already under the volume never re-move, and hot parts that
     * survive a first move can only expire later. Cost is O(expired
     * partitions); recent parts are never listed, read, or rewritten.
@@ -751,7 +755,7 @@ class FactTable(val root: String, spark: SparkSession,
 
   /** Major compaction — the MergeTree level-merge: rewrite EVERY live
     * part (all base generations + any buffer parts) into one fresh
-    * generation, collapsing the per-generation read fan-out that minor
+    * generation, collapsing the small per-partition files that minor
     * compactions accumulate. O(table), so at scale this runs rarely
     * (e.g. nightly) while the minor `compact()` runs per flush.
     */
@@ -1218,10 +1222,8 @@ class FactTable(val root: String, spark: SparkSession,
 
   /** Snapshot read over the live part set (both tiers — like the
     * ClickHouse Buffer engine, queries see buffered + flushed rows).
-    * The tiers have different physical layouts — base parts carry the
-    * partition column as a `date=` directory, buffer parts as a data
-    * column — so each tier is loaded with its own strategy and unioned
-    * by name (one mixed load trips CONFLICTING_DIRECTORY_STRUCTURES).
+    * The parts come from the log, never from a listing; see `readFiles`
+    * for how they become at most two file scans.
     */
   def read(asOfVersion: Long = Long.MaxValue): DataFrame = {
     val snap = snapshot(asOfVersion)
@@ -1243,12 +1245,11 @@ class FactTable(val root: String, spark: SparkSession,
       data.exists(f => vs.contains(f.path))
     })
     if (applicable.isEmpty) return readFiles(data)
-    data.groupBy(f => applicable.filter(t => victimsOf(t.path).contains(f.path))
-        .map(_.path))
-      .toSeq.sortBy(_._1.mkString(","))
-      .map { case (tombPaths, group) =>
-        tombPaths.foldLeft(readFiles(group)) { (df, tp) =>
-          val keys = spark.read.parquet(tp)
+    data.groupBy(f => applicable.filter(t => victimsOf(t.path).contains(f.path)))
+      .toSeq.sortBy(_._1.map(_.path).mkString(","))
+      .map { case (covering, group) =>
+        covering.foldLeft(readFiles(group)) { (df, t) =>
+          val keys = readFiles(Seq(t))
           // null-safe (<=>) equi-join: softDelete tombstones NULL key
           // tuples too, and a plain equi-anti-join could never mask them
           // (NULL = NULL is NULL ⇒ the row always survives). EqualNullSafe
@@ -1275,8 +1276,8 @@ class FactTable(val root: String, spark: SparkSession,
       StatsPruning.canPrune(cond, f.stats) || bloomPruned(cond, f) ||
         setPruned(cond, f) || tokenBloomPruned(cond, f) ||
         arrayBloomPruned(cond, f))
-    if (kept.isEmpty) // schema from any live file, zero rows
-      readFiles(all.take(1)).where(lit(false))
+    if (kept.isEmpty) // the table's schema, zero rows, no scan
+      readFiles(all).where(lit(false))
     else masked(kept, snap.tombFiles).where(cond)
   }
 
@@ -1295,31 +1296,57 @@ class FactTable(val root: String, spark: SparkSession,
       files.size)
   }
 
+  /** Read exactly `files` (log entries) as at most two file scans, with
+    * no listing and no schema-inference job: the base parts (every
+    * generation, all volumes) as one partitioned scan, whose partition
+    * values come from the parts' `k=v` path segments, and the buffer
+    * parts (or one tombstone part) as one flat scan, whose partition
+    * column is still a data column. Each scan's schema merges its parts'
+    * footer schemas (`schemasOf`) by Spark's `mergeSchema` rule, so
+    * add-column evolution reads the missing column as NULL; the two
+    * scans union by name.
+    */
   private[storage] def readFiles(files: Seq[FileEntry]): DataFrame = {
-    val snap = Snapshot(files, Set.empty, 0L)
-    if (snap.files.isEmpty)
+    if (files.isEmpty)
       throw new IllegalStateException(s"empty table at $root")
-    val (base, buffer) = snap.files.partition(_.tier == TierBase)
-    // each compaction generation is its own partitioned root — mixing
-    // two base-<uuid> roots under one basePath makes partition discovery
-    // see conflicting structures (found by FactTableProps)
-    val baseGens = base.groupBy(f => generationRoot(new Path(f.path)).toString)
-      .toSeq.sortBy(_._1)
-      .map { case (root, fs) =>
-        spark.read.option("basePath", root).parquet(fs.map(_.path): _*)
-      }
-    val tiers = baseGens ++
-      Option.when(buffer.nonEmpty)(spark.read.option("mergeSchema", true)
-        .parquet(buffer.map(_.path): _*))
-    tiers.reduce(_.unionByName(_, allowMissingColumns = true))
+    val (base, flat) = files.partition(_.tier == TierBase)
+    (Option.when(base.nonEmpty)(relation(base, partitioned = true)) ++
+      Option.when(flat.nonEmpty)(relation(flat, partitioned = false)))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** data/<base-uuid>/date=X/part.parquet → data/<base-uuid> */
-  private def generationRoot(p: Path): Path = {
-    var cur = p.getParent
-    while (cur.getParent != null && cur.getParent.getName != dataDir.getName)
-      cur = cur.getParent
-    cur
+  /** The one place a relation is made: a parquet HadoopFsRelation
+    * over `files`, served by a LogFileIndex (paths, sizes and times
+    * from the log).
+    */
+  private def relation(files: Seq[FileEntry], partitioned: Boolean): DataFrame = {
+    val conf = spark.sessionState.conf
+    val index = LogFileIndex(files, partitioned, conf)
+    val dataSchema = GraftFileBridge.mergedReadSchema(schemasOf(files), conf)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema, bucketSpec = None, new ParquetFileFormat, options = Map.empty)(spark))
+  }
+
+  /** Each part's footer schema, by path. Parts never change, so one
+    * footer read per part serves every later read: `entriesFor` fills
+    * the cache at commit, and parts this object did not write (another
+    * writer's, or older than the object) are read on the I/O pool the
+    * first time a read names them.
+    */
+  private val schemaCache =
+    scala.collection.concurrent.TrieMap[String, StructType]()
+
+  private def schemasOf(files: Seq[FileEntry]): Seq[StructType] = {
+    onIoPool(files.map(_.path).filterNot(schemaCache.contains).distinct)(footer)
+    files.map(f => schemaCache(f.path))
+  }
+
+  /** Open one part's footer (rows, stats, schema); caches the schema. */
+  private def footer(path: String): StatsPruning.FooterInfo = {
+    val info = StatsPruning.footerInfo(new Path(path), hadoopConf,
+      spark.sessionState.conf)
+    schemaCache.put(path, info.schema)
+    info
   }
 
   // -------------------------------------------------------------- helpers
@@ -1399,15 +1426,15 @@ class FactTable(val root: String, spark: SparkSession,
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val futs = files.map { f => Future {
-        val (rows, stats) =
-          StatsPruning.footerInfo(new Path(f.path), hadoopConf)
+        val info = footer(f.path)
+        val e = FileEntry(f.path, info.rows, f.bytes, tier, now, info.stats)
         if (tier != TierTomb) { // key tombstones are not data parts
-          bloomCols.foreach(c => writeBloomSidecar(f.path, c, rows))
-          setIndexCols.foreach(c => writeSetSidecar(f.path, c))
-          arrayBloomCols.foreach(c => writeArrayBloomSidecar(f.path, c, rows))
-          projections.foreach(p => writeProjSidecar(f.path, dir, p))
+          bloomCols.foreach(c => writeBloomSidecar(e, c))
+          setIndexCols.foreach(c => writeSetSidecar(e, c))
+          arrayBloomCols.foreach(c => writeArrayBloomSidecar(e, c))
+          projections.foreach(p => writeProjSidecar(e, p))
         }
-        FileEntry(f.path, rows, f.bytes, tier, now, stats)
+        e
       } }
       val entries = Await.result(Future.sequence(futs), Duration.Inf)
       mark("footers+sidecars")
@@ -1417,7 +1444,7 @@ class FactTable(val root: String, spark: SparkSession,
       // of parts costs one shuffle of #parts × bloom-size, never
       // thousands of driver-coordinated jobs
       if (tier != TierTomb && files.nonEmpty)
-        writeTokenBloomSidecars(dir, files.map(_.path))
+        writeTokenBloomSidecars(entries)
       mark("gramBlooms")
       entries
     } finally pool.shutdown()
@@ -1429,11 +1456,16 @@ class FactTable(val root: String, spark: SparkSession,
     scala.collection.concurrent.TrieMap[String,
       Option[org.apache.spark.util.sketch.BloomFilter]]()
 
-  private def writeBloomSidecar(part: String, c: String, rows: Long): Unit = {
-    val df = spark.read.parquet(part)
-    if (!df.columns.contains(c)) return // schema evolution: column absent
-    val bf = df.stat.bloomFilter(c, math.max(rows, 1L), 0.01)
-    val out = fs.create(new Path(part + ".bloom." + c), true)
+  /** True iff the part's file holds column `c` (its footer schema — not
+    * the case after add-column evolution, nor for a partition column).
+    */
+  private def hasColumn(part: FileEntry, c: String): Boolean =
+    schemasOf(Seq(part)).head.fieldNames.contains(c)
+
+  private def writeBloomSidecar(part: FileEntry, c: String): Unit = {
+    if (!hasColumn(part, c)) return
+    val bf = readFiles(Seq(part)).stat.bloomFilter(c, math.max(part.rows, 1L), 0.01)
+    val out = fs.create(new Path(part.path + ".bloom." + c), true)
     try bf.writeTo(out) finally out.close()
   }
 
@@ -1490,10 +1522,9 @@ class FactTable(val root: String, spark: SparkSession,
     */
   private val ArrayBloomElemsPerRowHint = 8L
 
-  private def writeArrayBloomSidecar(part: String, c: String,
-      rows: Long): Unit = {
-    val df = spark.read.parquet(part)
-    if (!df.columns.contains(c)) return // schema evolution: column absent
+  private def writeArrayBloomSidecar(part: FileEntry, c: String): Unit = {
+    if (!hasColumn(part, c)) return
+    val df = readFiles(Seq(part))
     import org.apache.spark.sql.types._
     val tag: Byte = df.schema(c).dataType match {
       case ArrayType(StringType, _) => 'S'
@@ -1502,8 +1533,8 @@ class FactTable(val root: String, spark: SparkSession,
     }
     val el = df.select(explode(col(c)).as("__e")).na.drop()
     val bf = el.stat.bloomFilter("__e",
-      math.max(rows * ArrayBloomElemsPerRowHint, 1L), 0.01)
-    val out = fs.create(new Path(part + ".abloom." + c), true)
+      math.max(part.rows * ArrayBloomElemsPerRowHint, 1L), 0.01)
+    val out = fs.create(new Path(part.path + ".abloom." + c), true)
     try { out.write(tag.toInt); bf.writeTo(out) } finally out.close()
   }
 
@@ -1561,9 +1592,9 @@ class FactTable(val root: String, spark: SparkSession,
   private val setCache =
     scala.collection.concurrent.TrieMap[String, Option[(String, Set[String])]]()
 
-  private def writeSetSidecar(part: String, c: String): Unit = {
-    val df = spark.read.parquet(part)
-    if (!df.columns.contains(c)) return // schema evolution: column absent
+  private def writeSetSidecar(part: FileEntry, c: String): Unit = {
+    if (!hasColumn(part, c)) return
+    val df = readFiles(Seq(part))
     import org.apache.spark.sql.types._
     val tag = df.schema(c).dataType match {
       case LongType | IntegerType | ShortType | ByteType => "long"
@@ -1578,7 +1609,7 @@ class FactTable(val root: String, spark: SparkSession,
     node.put("t", tag)
     val arr = node.putArray("v")
     vals.sorted.foreach(arr.add)
-    val out = fs.create(new Path(part + ".set." + c), true)
+    val out = fs.create(new Path(part.path + ".set." + c), true)
     try out.write(m.writeValueAsBytes(node)) finally out.close()
   }
 
@@ -1647,11 +1678,11 @@ class FactTable(val root: String, spark: SparkSession,
     * EMPTY bloom, which correctly proves every token absent; a MISSING
     * sidecar stays reserved for "legacy part, cannot prune".
     */
-  private def writeTokenBloomSidecars(dir: Path, parts: Seq[String]): Unit = {
-    writeGramBloomSidecars(dir, parts, tokenBloomCols, ".tokbf.",
+  private def writeTokenBloomSidecars(parts: Seq[FileEntry]): Unit = {
+    writeGramBloomSidecars(parts, tokenBloomCols, ".tokbf.",
       c => explode(split(coalesce(col(c), lit("")),
         StatsPruning.TokenSplitRe)))
-    writeGramBloomSidecars(dir, parts, ngramBloomCols, ".ngbf.",
+    writeGramBloomSidecars(parts, ngramBloomCols, ".ngbf.",
       c => explode_outer(expr(
         s"""CASE WHEN length(coalesce($c, '')) >= ${StatsPruning.NgramWidth}
               THEN transform(
@@ -1664,7 +1695,7 @@ class FactTable(val root: String, spark: SparkSession,
     * and character-n-gram (ngbf) bloom families; `gram` turns the
     * indexed column into one gram per row.
     */
-  private def writeGramBloomSidecars(dir: Path, parts: Seq[String],
+  private def writeGramBloomSidecars(parts: Seq[FileEntry],
       cols: Seq[String], suffix: String,
       gram: String => org.apache.spark.sql.Column): Unit = {
     if (cols.isEmpty || parts.isEmpty) return
@@ -1675,18 +1706,9 @@ class FactTable(val root: String, spark: SparkSession,
     // keyed by scheme-stripped ABSOLUTE path: a partitioned write reuses
     // one file name across partition directories, so names collide
     def norm(p: String): String = new Path(p).toUri.getPath
-    // Read the staged GENERATION DIRECTORY when it holds nothing but the
-    // freshly written parquet parts: an explicit N-path read pays a
-    // parallel-listing Spark job plus one driver getFileStatus per part
-    // (measured ~1 s at 313 parts). Other sidecar families write
-    // non-parquet files next to the parts BEFORE this pass runs, so fall
-    // back to the explicit list whenever any is configured.
-    val df0 =
-      if (bloomCols.isEmpty && setIndexCols.isEmpty &&
-          arrayBloomCols.isEmpty && projections.isEmpty)
-        spark.read.parquet(dir.toString)
-      else spark.read.parquet(parts: _*)
-    mark("read")
+    // exactly the staged parts, never their directory: sidecars of every
+    // family (this pass's own included) sit next to them
+    val df0 = readFiles(parts)
     cols.foreach { c =>
       val have = df0.columns.contains(c)
       val built: Map[String, Array[Byte]] = if (!have) Map.empty else {
@@ -1704,9 +1726,9 @@ class FactTable(val root: String, spark: SparkSession,
       // small writes on the driver (measured ~1 s of the dx32 commit at
       // 313 parts); same bounded-pool discipline as entriesFor's footers
       if (have) onIoPool(parts) { part =>
-        val bytes = built.getOrElse(norm(part),
+        val bytes = built.getOrElse(norm(part.path),
           FactTable.TokenBloom.toBytes(FactTable.TokenBloom.emptyBits))
-        val out = fs.create(new Path(part + suffix + c), true)
+        val out = fs.create(new Path(part.path + suffix + c), true)
         try out.write(bytes) finally out.close()
       }
       mark(s"write.$c")
@@ -1790,24 +1812,22 @@ class FactTable(val root: String, spark: SparkSession,
 
   // ---------------------------------------------------- projections
 
-  /** Stage one part's mini-rollup sidecar. `basePath` is the staged
-    * generation root, so partition-directory columns (`date=X`) are
-    * restored with their inferred types before grouping — a base part's
-    * file does not physically carry the partition column. A part whose
-    * schema lacks any projection column (schema evolution) writes no
-    * sidecar; `readProjection` then falls back to the base scan, the
-    * conservative ClickHouse contract.
+  /** Stage one part's mini-rollup sidecar. The part is read like any
+    * other, so a base part's partition-directory columns (`date=X`) are
+    * restored with their inferred types before grouping — its file does
+    * not physically carry them. A part whose schema lacks any projection
+    * column (schema evolution) writes no sidecar; `readProjection` then
+    * falls back to the base scan, the conservative ClickHouse contract.
     */
-  private def writeProjSidecar(part: String, basePath: Path,
-      spec: ProjectionSpec): Unit = {
-    val df = spark.read.option("basePath", basePath.toString).parquet(part)
+  private def writeProjSidecar(part: FileEntry, spec: ProjectionSpec): Unit = {
+    val df = readFiles(Seq(part))
     val needed = spec.keyCols ++ spec.sumCols
     if (!needed.forall(df.columns.contains)) return
     val aggs = spec.sumCols.map(c => sum(col(c)).as(c)) :+
       count(lit(1)).as(ProjCountCol)
     df.groupBy(spec.keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
-      .write.mode("overwrite").parquet(part + ".proj." + spec.name)
+      .write.mode("overwrite").parquet(part.path + ".proj." + spec.name)
   }
 
   /** Serve a named rollup from the live parts' projection sidecars:

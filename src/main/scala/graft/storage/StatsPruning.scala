@@ -1,11 +1,12 @@
 package graft.storage
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{expressions => ce}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file column statistics for data skipping — the Spark-side analog
@@ -35,12 +36,20 @@ object StatsPruning {
 
   // ------------------------------------------------------- footer harvest
 
-  /** Read (rowCount, per-column stats) from one parquet footer, merging
-    * row-group chunk stats. Columns whose writer recorded no stats (or
-    * only nulls) are omitted — absence always means "cannot prune".
+  /** What one footer open yields: the row count, the data-skipping
+    * stats, and the file's Spark schema (read as a parquet scan reads
+    * it: the schema Spark stored in the footer, else the converted
+    * parquet schema).
     */
-  def footerInfo(path: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Long, Map[String, ColStats]) = {
+  final case class FooterInfo(rows: Long, stats: Map[String, ColStats],
+      schema: org.apache.spark.sql.types.StructType)
+
+  /** Read one parquet footer, merging row-group chunk stats. Columns
+    * whose writer recorded no stats (or only nulls) are omitted from
+    * `stats` — absence always means "cannot prune".
+    */
+  def footerInfo(path: Path, conf: org.apache.hadoop.conf.Configuration,
+      sqlConf: org.apache.spark.sql.internal.SQLConf): FooterInfo = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
     try {
       val footer = reader.getFooter
@@ -64,7 +73,9 @@ object StatsPruning {
       }
       // hive-style partition dirs: data/<gen>/date=2024-01-02/part.parquet
       partitionValues(path).foreach { case (col, cs) => acc.put(col, cs) }
-      (reader.getRecordCount, acc.toMap)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(path, footer), new ParquetToSparkSchemaConverter(sqlConf))
+      FooterInfo(reader.getRecordCount, acc.toMap, schema)
     } finally reader.close()
   }
 

@@ -105,6 +105,21 @@ class DedupSpec extends AnyFunSuite {
     assert(!(l1 eq l3), "clearLabelsCache must force a re-resolution")
   }
 
+  test("a cached labelsCache frame reads whole after a limit action") {
+    DedupQueries.clearLabelsCache()
+    val labels = DedupQueries.clusterLabels(spark, TestSpark.sfDir)
+    // a partial first action on the cached frame…
+    assert(labels.limit(1).collect().length == 1)
+    // …and every later consumer of the same frame still reads every row
+    val cached = DedupQueries.clusterLabels(spark, TestSpark.sfDir)
+    assert(cached eq labels)
+    val want = DedupQueries.propagateMinLabels(
+      DedupQueries.lshCandidatePairs(spark, TestSpark.sfDir))
+      .as[(Long, Long)].collect().toSet
+    val got = cached.as[(Long, Long)].collect()
+    assert(got.length == want.size && got.toSet == want)
+  }
+
   test("d34 recovers planted span boundaries exactly at L, 2L-1, and 5L") {
     val rows = QueryDef.registry.find(_.name == "d34_varlen_substring_spans").get
       .build(spark, TestSpark.sfDir)

@@ -2,7 +2,7 @@ package graft
 
 import graft.storage.FactTable
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 /** Property: any interleaving of appends (including replayed txn ids),
   * compactions, TTL expirations, and targeted deletions preserves
@@ -102,5 +102,40 @@ object FactTableProps extends Properties("FactTable") {
       val inCond = $"modem_name".isin(inKeys.map(k => f"k$k%02d"): _*)
       t.readWhere(eqCond).count() == all.where(eqCond).count() &&
         t.readWhere(inCond).count() == all.where(inCond).count()
+    }
+
+  /** Property: the log-backed read path never changes results — for
+    * any history of appends (some carrying an added column) and
+    * compactions, `read` and `readWhere` equal a reference read done
+    * one file at a time (FileByFile), rows, columns and types.
+    */
+  property("log-backed reads equal file-by-file reads for any history") =
+    forAll(Gen.listOfN(6, Gen.frequency(
+      3 -> Gen.choose(0, 3).map(Option(_)), // append on day d
+      1 -> Gen.const(Option.empty[Int]))))  // compact
+    { ops =>
+      val t = new FactTable(
+        java.nio.file.Files.createTempDirectory("fact_readprop").toString, spark)
+      var txn = 0L
+      ops.foreach {
+        case Some(day) =>
+          val df = (1 to 3).map(i => ("m" + txn,
+            java.sql.Timestamp.valueOf(f"2024-03-0${day + 1} 00:00:0$i"),
+            i.toLong)).toDF("modem_name", "timestamp", "uptime")
+            .withColumn("date", org.apache.spark.sql.functions.to_date($"timestamp"))
+          // odd days carry an added column (add-column evolution)
+          t.append(if (day % 2 == 1)
+            df.withColumn("fw", org.apache.spark.sql.functions.lit(s"fw$day"))
+            else df, txn)
+          txn += 1
+        case None => t.compact()
+      }
+      txn == 0 || {
+        val cond = $"uptime" =!= 2L && $"date" =!= "2024-03-02"
+        val ref = FileByFile.read(t)
+        val diffs = FileByFile.diff(t.read(), ref) ++
+          FileByFile.diff(t.readWhere(cond), ref.where(cond))
+        diffs.isEmpty :| diffs.mkString("\n")
+      }
     }
 }

@@ -1481,4 +1481,200 @@ class FactTableSpec extends AnyFunSuite {
     assert(src.read().count() == 10, "source data deleted by clone vacuum")
     assert(clone.read().count() == 10)
   }
+
+  test("token and ngram blooms on one column: sidecars are never read as data") {
+    val t = new FactTable(
+      java.nio.file.Files.createTempDirectory("fact_grams").toString, spark,
+      tokenBloomCols = Seq("text"), ngramBloomCols = Seq("text"))
+    def docs(id0: Long, texts: Seq[String]) =
+      texts.zipWithIndex.map { case (tx, i) => (id0 + i, tx) }
+        .toDF("doc_id", "text")
+        .withColumn("date", to_date(lit("2024-03-01")))
+    // the ngram pass runs after the token pass has written its sidecars
+    // next to the staged parts
+    t.append(docs(0, Seq("alpha beta", "beta alpha")).coalesce(1), 0)
+    t.append(docs(10, Seq("gamma delta", "delta gamma")).coalesce(1), 1)
+    assert(t.pruneReport(FactTable.hasToken($"text", "gamma")) == ((1, 2)))
+    assert(t.pruneReport($"text".contains("amm")) == ((1, 2)))
+    t.compact(sortCols = Seq("doc_id"))
+    assert(t.readWhere(FactTable.hasToken($"text", "gamma")).count() == 2)
+    assert(t.readWhere($"text".contains("elt")).count() == 2)
+    assert(t.tokenBloomFpp("text").nonEmpty && t.ngramBloomFpp("text").nonEmpty)
+  }
+
+  // ---------------------------------------------- log-backed read path
+
+  /** `read` and `readWhere(cond)` equal the file-by-file reference. */
+  private def assertReadsMatch(t: FactTable, cond: org.apache.spark.sql.Column,
+      asOf: Long = Long.MaxValue,
+      partTypes: Map[String, String] = Map("date" -> "date")): Unit = {
+    val ref = FileByFile.read(t, asOf, partTypes)
+    FileByFile.diff(t.read(asOf), ref).foreach(d => fail(s"read: $d"))
+    FileByFile.diff(t.readWhere(cond, asOf), ref.where(cond))
+      .foreach(d => fail(s"readWhere: $d"))
+  }
+
+  /** data/<generation>/… of a part */
+  private def generation(f: FactTable.FileEntry): String =
+    "/data/([^/]+)/".r.findFirstMatchIn(f.path).get.group(1)
+
+  test("log-backed read equals a file-by-file read: buffer, base, both tiers, 3+ generations") {
+    val cond = $"uptime" > 3L && $"modem_name" =!= "m2"
+    val t = freshTable()
+    (0 until 3).foreach(i => t.append(rows(6, s"2024-03-0${i + 1}", s"m$i"), i))
+    assertReadsMatch(t, cond) // buffer only
+    t.compact()
+    assert(t.snapshot().files.forall(_.tier == FactTable.TierBase))
+    assertReadsMatch(t, cond) // base only
+    t.append(rows(4, "2024-03-02", "m7"), 3)
+    assertReadsMatch(t, cond) // both tiers
+    // two reads of one snapshot plan as the same relation (cache hits)
+    assert(t.read().queryExecution.optimizedPlan
+      .sameResult(t.read().queryExecution.optimizedPlan))
+    (4 until 7).foreach { g =>
+      t.append(rows(5, s"2024-03-0${g % 2 + 1}", s"m$g"), g)
+      t.compact()
+    }
+    t.append(rows(3, "2024-03-03", "m9"), 9)
+    assert(t.snapshot().dataFiles.map(generation).distinct.size == 5)
+    assertReadsMatch(t, cond)
+    // a filter no part can satisfy: no rows, the table's full schema
+    val none = t.readWhere($"uptime" > 1000L)
+    assert(none.count() == 0 && none.schema == t.read().schema)
+  }
+
+  test("log-backed read merges add-column evolution as mergeSchema does") {
+    val cond = $"fw".isNull || $"uptime" > 2L
+    val buf = freshTable() // evolution across buffer parts
+    buf.append(rows(4, "2024-03-01", "m1"), 0)
+    buf.append(rows(3, "2024-03-01", "m2").withColumn("fw", lit("19.2")), 1)
+    buf.append(rows(2, "2024-03-02", "m3"), 2)
+    assert(buf.read().columns.toSeq ==
+      Seq("modem_name", "timestamp", "uptime", "date", "fw"))
+    assertReadsMatch(buf, cond)
+    val gen = freshTable() // …and across base generations
+    gen.append(rows(4, "2024-03-01", "m1"), 0)
+    gen.compact()
+    gen.append(rows(3, "2024-03-02", "m2").withColumn("fw", lit("19.2")), 1)
+    gen.compact()
+    gen.append(rows(2, "2024-03-03", "m3").withColumn("hw", lit(7)), 2)
+    gen.compact()
+    gen.append(rows(2, "2024-03-03", "m4"), 3)
+    assertReadsMatch(gen, cond)
+    assert(gen.read().filter($"fw".isNull).count() == 8)
+    assert(gen.read().filter($"hw" === 7).count() == 2)
+  }
+
+  test("log-backed read: tombstones, time travel and a shallow clone match file-by-file") {
+    val t = freshTable()
+    t.append(rows(6, "2024-03-01", "m1"), 0)
+    t.compact()
+    t.append(rows(6, "2024-03-02", "m2"), 1)
+    val beforeDelete = t.snapshot().nextVersion - 1
+    val gone = $"uptime" === 2L
+    assert(t.softDelete(gone, Seq("modem_name", "uptime")) == 2L)
+    assert(t.snapshot().tombFiles.nonEmpty)
+    val cond = $"modem_name" === "m2" || $"uptime" < 4L
+    val ref = FileByFile.read(t).where(!gone)
+    FileByFile.diff(t.read(), ref).foreach(d => fail(s"masked read: $d"))
+    FileByFile.diff(t.readWhere(cond), ref.where(cond))
+      .foreach(d => fail(s"masked readWhere: $d"))
+    assertReadsMatch(t, cond, asOf = beforeDelete)
+    // the clone's parts live under the source's root; its own append
+    // comes after the delete, so the carried tombstone leaves it alone
+    val croot = java.nio.file.Files.createTempDirectory("fact_clone").toString
+    val clone = t.cloneShallowTo(croot)
+    clone.append(rows(3, "2024-03-03", "m3"), 0)
+    assert(clone.snapshot().dataFiles.count(!_.path.contains(croot)) ==
+      t.snapshot().dataFiles.size)
+    val cref = FileByFile.read(clone).where(!gone || $"modem_name" === "m3")
+    FileByFile.diff(clone.read(), cref).foreach(d => fail(s"clone read: $d"))
+    FileByFile.diff(clone.readWhere(cond), cref.where(cond))
+      .foreach(d => fail(s"clone readWhere: $d"))
+  }
+
+  test("partition columns read back as Spark infers them: date, integer, string") {
+    import org.apache.spark.sql.types._
+    def table(partCol: String, value: Int => Any): FactTable = {
+      val t = freshTable()
+      (0 until 3).foreach { i =>
+        t.append(rows(4, s"2024-03-0${i + 1}", s"m$i")
+          .withColumn(partCol, lit(value(i))), i)
+        t.compact(partitionCol = partCol)
+      }
+      t.append(rows(2, "2024-03-02", "m9").withColumn(partCol, lit(value(9))), 9)
+      t
+    }
+    val cases = Seq(
+      ("date", (i: Int) => java.sql.Date.valueOf(s"2024-03-0${i % 3 + 1}"), DateType, "date"),
+      ("k", (i: Int) => i * 10, IntegerType, "int"),
+      ("region", (i: Int) => s"r$i", StringType, "string"))
+    cases.foreach { case (c, value, typ, sqlType) =>
+      val t = table(c, value)
+      assert(t.read().schema(c).dataType == typ, s"$c read as ${t.read().schema(c)}")
+      val probe = col(c) === lit(value(1))
+      assertReadsMatch(t, probe, partTypes = Map(c -> sqlType))
+      // partition filters prune base directories at plan time
+      val touched = t.readWhere(probe).select(input_file_name())
+        .distinct().as[String].collect()
+      assert(touched.nonEmpty && touched.forall(_.contains(s"$c=")), touched.mkString(", "))
+    }
+  }
+
+  /** (result, Spark jobs submitted while `body` ran on this thread). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) {
+          if (js.properties.getProperty("spark.job.description") == "sentinel")
+            sentinel.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      val a = body
+      // listener events arrive in order: once the sentinel job's start
+      // is seen, every job `body` submitted has been counted
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private object Plans
+      extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    def fileScans(p: org.apache.spark.sql.execution.SparkPlan): Int =
+      collect(p) { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size
+  }
+
+  test("a 40-generation read plans at most 2 file scans and submits no job before its action") {
+    val t = freshTable()
+    (0 until 40).foreach { g =>
+      t.append(rows(2, f"2024-03-${g % 28 + 1}%02d", s"m$g"), g)
+      t.compact()
+    }
+    t.append(rows(2, "2024-03-01", "mb"), 40)
+    assert(t.snapshot().dataFiles.map(generation).distinct.size == 41)
+    val cond = $"uptime" >= 1L && $"date" >= "2024-03-05"
+    val (plans, jobs) = jobsDuring(Seq(t.read(), t.readWhere(cond),
+      spark.read.format("graft").load(t.root).where(cond))
+      .map(_.queryExecution.executedPlan))
+    assert(jobs == 0, s"$jobs Spark jobs before the first action")
+    plans.take(2).foreach(p => assert(Plans.fileScans(p) <= 2, p.toString))
+    assert(t.read().count() == 82)
+    assert(t.readWhere(cond).count() ==
+      spark.read.format("graft").load(t.root).where(cond).count())
+  }
 }
